@@ -199,11 +199,10 @@ def main() -> int:
         ann_recall_report,
         build_ivf_index,
         build_ivfpq_index,
-        clear_ivf_cache,
-        clear_pq_cache,
         index_drift_report,
         rebuild_ivfpq_index,
     )
+    from distributed_graph_coloring_with_pyspark_spark.cache import release
     from distributed_graph_coloring_with_pyspark_spark.session import (
         get_spark,
         release_session_caches,
@@ -301,8 +300,8 @@ def main() -> int:
     # codebook retrain; now it reads the index's persisted quantizer,
     # so cold-vs-warm is the honest restart-latency pair.
     def bench_ann_ivfpq_serve_cold(spark, sf_dir):
-        clear_ivf_cache(spark)
-        clear_pq_cache(spark)
+        release(spark, "ivf_centroids")
+        release(spark, "pq_codebooks")
         spark.catalog.refreshByPath(ivfpq_path)
         return ann_ivfpq_topk_indexed(spark, sf_dir, ivfpq_path)
 
@@ -317,8 +316,8 @@ def main() -> int:
         return None  # the partitioned write already materialized
 
     def bench_ann_opq_serve_cold(spark, sf_dir):
-        clear_ivf_cache(spark)
-        clear_pq_cache(spark)
+        release(spark, "ivf_centroids")
+        release(spark, "pq_codebooks")
         spark.catalog.refreshByPath(opq_path)
         return ann_ivfpq_topk_indexed(spark, sf_dir, opq_path)
 
@@ -365,12 +364,11 @@ def main() -> int:
     # steady-state story their medians are meant to tell
     # (amortized-vs-one-off both first-class numbers).
     from distributed_graph_coloring_with_pyspark_spark.operators.text_dedup import (
-        clear_pair_cache,
         jaccard_pair_frame,
     )
 
     def bench_jaccard_pair_build(spark, sf_dir):
-        clear_pair_cache(spark)
+        release(spark, "jaccard_pairs")
         return jaccard_pair_frame(spark, sf_dir)
 
     # The persisted MinHash index pair (r6) — same treatment as the IVF
@@ -400,16 +398,15 @@ def main() -> int:
     # consumers that follow read the warm cache (amortized and one-off
     # both first-class).
     from distributed_graph_coloring_with_pyspark_spark.operators.similarity import (
-        clear_neardup_pair_cache,
         neardup_pair_frame_cached,
     )
 
     def bench_gemm_pair_build(spark, sf_dir):
-        clear_neardup_pair_cache(spark, "exact")
+        release(spark, "neardup_pairs", "exact")
         return neardup_pair_frame_cached(spark, sf_dir, "exact")
 
     def bench_lsh_pair_build(spark, sf_dir):
-        clear_neardup_pair_cache(spark, "lsh")
+        release(spark, "neardup_pairs", "lsh")
         return neardup_pair_frame_cached(spark, sf_dir, "lsh")
 
     sim_build_lines = {
@@ -481,17 +478,15 @@ def main() -> int:
     )
     from distributed_graph_coloring_with_pyspark_spark.operators.unigram_lm import (
         PYTEST_QUERIES as UNIGRAM_QUERIES,
-        clear_unigram_cache,
         unigram_model_cached,
     )
     from distributed_graph_coloring_with_pyspark_spark.operators.tokenizer import (
         PYTEST_QUERIES as TOKENIZER_QUERIES,
         bpe_model_cached,
-        clear_bpe_cache,
     )
 
     def bench_bpe_train_build(spark, sf_dir):
-        clear_bpe_cache(spark)
+        release(spark, "bpe_models")
         bpe_model_cached(spark, sf_dir)[1].write.format("noop").mode(
             "overwrite"
         ).save()
@@ -500,7 +495,7 @@ def main() -> int:
     def bench_unigram_train_build(spark, sf_dir):
         # the unigram model is a bounded driver dict — training it IS
         # the materialization, no noop write needed
-        clear_unigram_cache(spark)
+        release(spark, "unigram_models")
         unigram_model_cached(spark, sf_dir)
         return None
 
@@ -513,13 +508,12 @@ def main() -> int:
     # curation_pipeline_e2e's gate in its own family) read the warm
     # memo — amortized and one-off both first-class numbers.
     from distributed_graph_coloring_with_pyspark_spark.operators.classifier import (
-        clear_classifier_cache,
         holdout_metrics,
         trained_weights_cached,
     )
 
     def bench_classifier_train_build(spark, sf_dir):
-        clear_classifier_cache(spark)
+        release(spark, "classifier")
         trained_weights_cached(spark, sf_dir, "full")
         holdout_metrics(spark, sf_dir)  # trains train80 + AUC scan
         return None
@@ -529,12 +523,11 @@ def main() -> int:
     # its one contamination GEMM pass is priced here with the memo
     # cleared per run, and the funnel median reads it warm.
     from distributed_graph_coloring_with_pyspark_spark.operators.curation import (
-        clear_decon_cache,
         dropped_ids_cached,
     )
 
     def bench_decon_build(spark, sf_dir):
-        clear_decon_cache(spark)
+        release(spark, "decon_drop_sets")
         dropped_ids_cached(spark, sf_dir)
         return None
 
@@ -714,32 +707,7 @@ def main() -> int:
         json.dump({"cold": cold, "sf": sf}, f, indent=1, sort_keys=False)
         f.write("\n")
 
-    # stdout line: headline over ALL queries, per-query medians for the
-    # driver-registered 50 only, 2 dp, compact separators — must fit the
-    # driver's 2000-char tail window.
-    line_queries = {
-        k: (round(timings[k], 2) if timings[k] != float("inf") else None)
-        for k in registry
-        if k in timings
-    }
-    # Per-registry-row floors on the stdout line (r15, VERDICT r14 #2):
-    # the r14 round had 34 untouched rows flagged "regressed" purely by
-    # an ambient window; the min-over-runs floor separates plan moves
-    # (floor moves) from ambient variance (median moves, floor doesn't),
-    # and it was already computed and committed (BENCH_LOCAL.json) but
-    # invisible to the one-line JSON the driver parses.  Emitted as an
-    # ARRAY aligned with the "queries" keys, not a second name->sec map:
-    # a keyed map measures 2790 chars on the r14 data vs 1685 for the
-    # array form, and the driver reads a ~2000-char stdout tail — the
-    # map form would overflow it and lose the WHOLE line (the exact
-    # BENCH_r04 failure the 1900-char budget exists to prevent).
-    # min_sec[i] is the floor of the query named by the i-th key of
-    # "queries"; null mirrors a failed query.  Additive key — existing
-    # keys, their order, and their semantics are unchanged.
-    line_min = [
-        (round(mins[k], 2) if mins.get(k) is not None else None)
-        for k in line_queries
-    ]
+    line_queries, line_min = stdout_columns(registry, timings, mins)
     out = {
         "metric": "sum_query_sec",
         "value": total,
@@ -767,6 +735,32 @@ def main() -> int:
         line = json.dumps(out, separators=(",", ":"))
     print(line)
     return 0
+
+
+def stdout_columns(
+    registry, timings: dict[str, float], mins: dict[str, float | None]
+) -> tuple[dict[str, float | None], list[float | None]]:
+    """The stdout line's ``queries`` map and ``min_sec`` array: the
+    registered rows only, in registry order, 2 dp.
+
+    ``min_sec[i]`` is the floor (min over the raw runs) of the query
+    named by the i-th key of ``queries``; null mirrors a failed query.
+    The floor separates plan moves (floor moves) from ambient variance
+    (median moves, floor doesn't).  It is an ARRAY aligned with the
+    keys, not a second name->sec map, because the map form measured
+    2790 chars against 1685 for the array on BENCH_r14 data and would
+    overflow the ~2000-char stdout tail that is read (the BENCH_r04
+    failure the 1900-char budget exists to prevent).  Both are built in
+    ONE pass over the registry so the array cannot drift out of step
+    with the map's keys."""
+    queries: dict[str, float | None] = {}
+    floors: list[float | None] = []
+    for k in registry:
+        if k not in timings:
+            continue
+        queries[k] = round(timings[k], 2) if timings[k] != float("inf") else None
+        floors.append(round(mins[k], 2) if mins.get(k) is not None else None)
+    return queries, floors
 
 
 if __name__ == "__main__":

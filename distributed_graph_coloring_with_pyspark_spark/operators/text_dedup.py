@@ -42,12 +42,10 @@ end (see _simhash_signatures).
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import persist_tracked
+from ..cache import memo, persist_tracked
 from ..sources.tables import load_table
 
 # MinHash parameters: b bands × r rows = k hashes.
@@ -158,38 +156,18 @@ def _doc_shingles(
 # single most expensive pre-shuffle step of each (~5 s of HOF work per
 # scan at sf0.1).  Memoize ONE persisted copy per (session, sf_dir) —
 # the same shared-scan materialization the customer-graph edge cache
-# does (graph_bridge.py).  Lifetime honesty (review r5): the weak
-# keying only guards against id-recycling aliasing — it canNOT free
-# entries when a session is dropped, because the cached frame itself
-# strongly references its session; EXPLICIT release
-# (clear_shingle_cache / release_session_caches) is the real
-# mechanism.  At 100 TB this is the "materialize the shingle table
-# once per corpus build" step every multi-pass dedup pipeline
-# schedules.
-_SHINGLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
+# does (graph_bridge.py).  At 100 TB this is the "materialize the
+# shingle table once per corpus build" step every multi-pass dedup
+# pipeline schedules.
 def shingle_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, shingles) for this session+corpus (built with
     the parallel projection; consumers reading the cache no longer care
     about the scan-split question the parallel flag answers)."""
-    per_session = _SHINGLE_CACHE.setdefault(spark, {})
-    df = per_session.get(sf_dir)
-    if df is None:
-        df = _doc_shingles(spark, sf_dir, parallel=True).persist()
-        per_session[sf_dir] = df
-    return df
-
-
-def clear_shingle_cache(spark: SparkSession) -> int:
-    """Unpersist and drop this session's shingle frames; returns the
-    number of entries released."""
-    dropped = _SHINGLE_CACHE.pop(spark, {})
-    for df in dropped.values():
-        df.unpersist(False)
-    return len(dropped)
+    return memo(
+        spark,
+        ("shingles", sf_dir),
+        lambda: _doc_shingles(spark, sf_dir, parallel=True).persist(),
+    )
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -435,43 +413,6 @@ def dedup_incremental(
     )
 
 
-# index dirs for the self-contained registry entry below, memoized per
-# (session, corpus) with the same WeakKeyDictionary discipline as
-# _PAIR_CACHE (ADVICE r7: an id(spark) key can be recycled after the
-# session is garbage-collected, silently adopting a dead session's
-# index).  Every created temp dir is also registered for process-exit
-# removal, and clear_incremental_e2e_index/release_session_caches
-# reclaim them eagerly.
-_INCR_E2E_INDEX: "weakref.WeakKeyDictionary[SparkSession, dict[str, str]]" = (
-    weakref.WeakKeyDictionary()
-)
-_INCR_E2E_DIRS: list[str] = []
-_INCR_E2E_ATEXIT_ARMED = False
-
-
-def clear_incremental_e2e_index(spark: SparkSession) -> int:
-    """Drop this session's e2e index memo and remove its temp dirs;
-    returns entries released."""
-    import os
-    import shutil
-
-    dropped = _INCR_E2E_INDEX.pop(spark, {})
-    for path in dropped.values():
-        root = os.path.dirname(path)
-        shutil.rmtree(root, ignore_errors=True)
-        if root in _INCR_E2E_DIRS:
-            _INCR_E2E_DIRS.remove(root)
-    return len(dropped)
-
-
-def _remove_e2e_dirs() -> None:
-    import shutil
-
-    for d in _INCR_E2E_DIRS:
-        shutil.rmtree(d, ignore_errors=True)
-    _INCR_E2E_DIRS.clear()
-
-
 def dedup_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-contained (spark, sf_dir) form of the incremental dedup
     pair for the driver registry (round-7 rotation): build the corpus
@@ -480,24 +421,19 @@ def dedup_incremental_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, corpus) — steady state is the serving path (index reads
     only), exactly the amortization bench.py prices separately as
     ``minhash_index_build`` / ``dedup_incremental`` in the dedup
-    family."""
-    import atexit
+    family.  The memoized ``TemporaryDirectory`` is removed by
+    ``release_session_caches`` or, failing that, by its own finalizer
+    at process exit."""
     import os
     import tempfile
 
-    global _INCR_E2E_ATEXIT_ARMED
-    per_session = _INCR_E2E_INDEX.setdefault(spark, {})
-    path = per_session.get(sf_dir)
-    if path is None or not os.path.isdir(path):
-        root = tempfile.mkdtemp(prefix="mh_index_e2e_")
-        path = os.path.join(root, "index")
-        build_minhash_index(spark, sf_dir, path)
-        per_session[sf_dir] = path
-        _INCR_E2E_DIRS.append(root)
-        if not _INCR_E2E_ATEXIT_ARMED:
-            atexit.register(_remove_e2e_dirs)
-            _INCR_E2E_ATEXIT_ARMED = True
-    return dedup_incremental(spark, sf_dir, path)
+    def build() -> tempfile.TemporaryDirectory:
+        tmp = tempfile.TemporaryDirectory(prefix="mh_index_e2e_")
+        build_minhash_index(spark, sf_dir, os.path.join(tmp.name, "index"))
+        return tmp
+
+    tmp = memo(spark, ("e2e_index_dirs", sf_dir), build)
+    return dedup_incremental(spark, sf_dir, os.path.join(tmp.name, "index"))
 
 
 def _incremental_oracle() -> str:
@@ -1380,35 +1316,18 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB this is "materialize the pair table once per corpus build":
 # every downstream consumer (drop list, clustering, calibration) reads
 # the same artifact rather than re-running the set-similarity join.
-# Lifetime honesty: explicit release (clear_pair_cache /
-# release_session_caches) is the mechanism, same as every session memo.
 # Consumers: dedup_ngram_jaccard, dedup_components, dedup_keep_policy,
 # and (since round 7) curate_corpus, which restricts the corpus-wide
 # pair list to its exact-dedup survivors via two semi-joins.
-_PAIR_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def jaccard_pair_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_a, doc_b, j) exact-Jaccard pairs for this
     session+corpus (built on the session shingle cache)."""
-    per_session = _PAIR_CACHE.setdefault(spark, {})
-    df = per_session.get(sf_dir)
-    if df is None:
+
+    def build() -> DataFrame:
         grams = shingle_frame(spark, sf_dir).filter(F.size("shingles") > 0)
-        df = _prefix_jaccard_pairs(grams).persist()
-        per_session[sf_dir] = df
-    return df
+        return _prefix_jaccard_pairs(grams).persist()
 
-
-def clear_pair_cache(spark: SparkSession) -> int:
-    """Unpersist and drop this session's pair frames; returns entries
-    released."""
-    dropped = _PAIR_CACHE.pop(spark, {})
-    for df in dropped.values():
-        df.unpersist(False)
-    return len(dropped)
+    return memo(spark, ("jaccard_pairs", sf_dir), build)
 
 
 def _l2_candidate_pairs(ranked: DataFrame, pi1) -> DataFrame:

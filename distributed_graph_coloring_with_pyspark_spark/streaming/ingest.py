@@ -155,8 +155,25 @@ def _state_paths(state_dir: str) -> tuple[str, str, str]:
     returned path is a kind-partition directory — reading it directly
     sees exactly the epoch-partitioned frame the old per-store layout
     held (column pruning drops the other kinds' all-NULL columns), so
-    every reader below is unchanged."""
+    every reader below is unchanged.
+
+    A state dir in the legacy per-store layout (separate ``kept/``,
+    ``index/``, ``decisions/`` dirs, no ``store/``) is refused: read
+    through the store paths it would look like an empty corpus and the
+    gate would admit duplicates of everything already kept."""
     store = os.path.join(state_dir, "store")
+    legacy = [
+        d
+        for d in ("kept", "index", "decisions")
+        if os.path.isdir(os.path.join(state_dir, d))
+    ]
+    if legacy and not os.path.isdir(store):
+        raise ValueError(
+            f"gate state dir {state_dir!r} has the legacy per-store layout "
+            f"({', '.join(d + '/' for d in legacy)} but no store/); "
+            "this gate cannot read it — rebuild the state by replaying "
+            "the arrivals into an empty state dir"
+        )
     return (
         os.path.join(store, "kind=kept"),
         os.path.join(store, "kind=index"),
@@ -427,6 +444,7 @@ def streaming_neardup_gate(
     (doc_id, verdict ∈ {novel, dup_vs_corpus, dup_in_batch},
     matched_doc).  Restartable: pass the same ``checkpoint_dir`` and
     ``state_dir`` to resume exactly-once after a stop."""
+    _, _, dec_dir = _state_paths(state_dir)  # refuses a legacy layout
     stream = (
         spark.readStream.schema(DOC_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -442,7 +460,6 @@ def streaming_neardup_gate(
         q.processAllAvailable()
     finally:
         q.stop()
-    _, _, dec_dir = _state_paths(state_dir)
     return _decisions_frame(spark, dec_dir).orderBy("doc_id")
 
 

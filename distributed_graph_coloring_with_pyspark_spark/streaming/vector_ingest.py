@@ -19,11 +19,13 @@ composes the engine's already-pinned pieces:
   sized work, one partitioned write touching only the batch's cells;
 - state is (epoch, cell)-partitioned parquet maintained by
   ``foreachBatch``; each epoch is STAGED as an invisible
-  ``_staged_epoch_N`` dir and PUBLISHED with one atomic rename to
+  ``_staged_epoch_N`` dir and PUBLISHED with one rename (atomic on
+  local/HDFS, a copy on object stores — see ``_index_epoch``) to
   ``epoch=N`` (r15 — the dynamic-partition-overwrite commit it
   replaces paid a fixed ~1-2 s/epoch of committer reconciliation
-  against the whole index root), so restarts are exactly-once and
-  ``epoch=N`` is always either absent or complete — a plain append
+  against the whole index root), so restarts are exactly-once and,
+  where the rename is atomic, ``epoch=N`` is always either absent or
+  complete — a plain append
   (the batch ``ivfpq_index_add``) would double-write on replay;
 - the serve path is UNCHANGED: ``ann_ivfpq_topk_indexed`` reads the
   (epoch, cell) layout through the same probed-cell PartitionFilter
@@ -147,9 +149,14 @@ def _index_epoch(
     (epoch=N/cell=M/part-*.parquet; the epoch value comes from the
     directory name exactly as dynamic overwrite left it), and the
     exactly-once contract is strictly stronger: ``epoch=N`` is either
-    absent or COMPLETE (rename is atomic on one filesystem), a replayed
-    epoch deletes-then-renames idempotently, and a crash mid-epoch
-    leaves only an invisible staging dir that the replay overwrites.
+    absent or COMPLETE — but only where ``FileSystem.rename`` of a
+    directory is atomic (the local filesystem, HDFS).  On object stores
+    (s3a and kin) rename is a non-atomic copy-then-delete, so a crash
+    mid-publish can leave a partial ``epoch=N`` visible to readers; the
+    replay's delete-then-rename repairs it, but readers in between see
+    the partial epoch.  A replayed epoch deletes-then-renames
+    idempotently, and a crash mid-write leaves only an invisible
+    staging dir that the replay overwrites.
     Concurrent-reader visibility during the replace is the same story
     as before (dynamic overwrite also swapped files non-atomically);
     the serving answer for that remains the r14 version-pointer flip,

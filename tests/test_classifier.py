@@ -12,6 +12,7 @@ from collections import Counter, defaultdict
 import duckdb
 import numpy as np
 
+from distributed_graph_coloring_with_pyspark_spark.cache import release
 from distributed_graph_coloring_with_pyspark_spark.operators.classifier import (
     _CLS_BUCKETS,
     _CLS_LR,
@@ -378,16 +379,18 @@ def test_classifier_session_memo_lifecycle(spark):
     repeated calls return the identical cached objects (no persist
     accumulation, the ADVICE r10 lifecycle point), and the release hook
     drops the memo so the next call rebuilds and still agrees."""
+    from distributed_graph_coloring_with_pyspark_spark.cache import _STORE
     from distributed_graph_coloring_with_pyspark_spark.operators.classifier import (
-        _CLS_SESSION_CACHE,
-        clear_classifier_cache,
         classifier_holdout_eval,
         feature_frame_cached,
         holdout_metrics,
         trained_weights_cached,
     )
 
-    clear_classifier_cache(spark)
+    def classifier_keys():
+        return sorted(k for k in _STORE.get(id(spark), {}) if k[0] == "classifier")
+
+    release(spark, "classifier")
     feats = feature_frame_cached(spark, SF0001)
     assert feature_frame_cached(spark, SF0001) is feats
     w_full = trained_weights_cached(spark, SF0001, "full")
@@ -399,13 +402,12 @@ def test_classifier_session_memo_lifecycle(spark):
     m = holdout_metrics(spark, SF0001)
     assert holdout_metrics(spark, SF0001) is m
     # the memo holds exactly: 1 frame + 2 weight entries + 1 metrics
-    per = _CLS_SESSION_CACHE.get(spark)
-    assert per is not None and len(per) == 4, sorted(per)
+    assert len(classifier_keys()) == 4, classifier_keys()
     row = classifier_holdout_eval(spark, SF0001).collect()[0]
 
     # release → rebuild from scratch → identical report
-    assert clear_classifier_cache(spark) == 4
-    assert _CLS_SESSION_CACHE.get(spark) in (None, {})
+    assert release(spark, "classifier") == {"classifier": 4}
+    assert classifier_keys() == []
     row2 = classifier_holdout_eval(spark, SF0001).collect()[0]
     assert row.asDict() == row2.asDict()
 
@@ -435,13 +437,12 @@ def test_dual_training_matches_sequential(spark):
     from pyspark.sql import functions as F
 
     from distributed_graph_coloring_with_pyspark_spark.operators.classifier import (
-        clear_classifier_cache,
         feature_frame_cached,
         train_quality_classifier,
         trained_weights_cached,
     )
 
-    clear_classifier_cache(spark)
+    release(spark, "classifier")
     feats = feature_frame_cached(spark, SF0001)
     w_full, l_full, n_full = trained_weights_cached(spark, SF0001, "full")
     w_80, l_80, n_80 = trained_weights_cached(spark, SF0001, "train80")
@@ -468,11 +469,10 @@ def test_dual_training_one_action_per_step(spark, monkeypatch):
     models together (the whole point of fusing)."""
     from distributed_graph_coloring_with_pyspark_spark.operators.classifier import (
         _train_dual,
-        clear_classifier_cache,
         feature_frame_cached,
     )
 
-    clear_classifier_cache(spark)
+    release(spark, "classifier")
     feats = feature_frame_cached(spark, SF0001)
     probe = spark.range(1)
     DF = type(probe)
@@ -505,17 +505,16 @@ def test_holdout_eval_repeat_calls_accumulate_nothing(spark):
     in one session must not grow the persisted-frame set — the scored
     holdout and histogram persists are released inside holdout_metrics
     and the scalars are memoized, so only the shared feature frame may
-    stay cached (released by clear_classifier_cache)."""
+    stay cached (released with the classifier memo)."""
     from distributed_graph_coloring_with_pyspark_spark.operators.classifier import (
         classifier_holdout_eval,
-        clear_classifier_cache,
     )
 
-    clear_classifier_cache(spark)
+    release(spark, "classifier")
     jsc = spark.sparkContext._jsc
     classifier_holdout_eval(spark, SF0001).collect()
     after_first = jsc.getPersistentRDDs().size()
     classifier_holdout_eval(spark, SF0001).collect()
     classifier_holdout_eval(spark, SF0001).collect()
     assert jsc.getPersistentRDDs().size() == after_first
-    clear_classifier_cache(spark)
+    release(spark, "classifier")

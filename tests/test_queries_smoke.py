@@ -93,26 +93,28 @@ def test_query_runs(spark, name, fn):
 
 
 def test_graph_edge_cache_release(spark):
+    from distributed_graph_coloring_with_pyspark_spark.cache import release
     from distributed_graph_coloring_with_pyspark_spark.operators import graph_bridge as GB
 
-    GB.customer_graph_edges(spark, SF)
-    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("dgc_customer_edges_")]
-    assert views
-    assert GB.clear_customer_graph_cache(spark) >= 1
-    assert not any(
-        t.name.startswith("dgc_customer_edges_") for t in spark.catalog.listTables()
-    )
+    edges = GB.customer_graph_edges(spark, SF)
+    assert GB.customer_graph_edges(spark, SF) is edges  # memo hit
+    assert edges.storageLevel.useMemory or edges.storageLevel.useDisk
+    assert release(spark, "customer_graph")["customer_graph"] >= 1
+    assert not (edges.storageLevel.useMemory or edges.storageLevel.useDisk)
     # memoization still works after a release
-    assert GB.customer_graph_edges(spark, SF).count() > 0
-    GB.clear_customer_graph_cache(spark)
+    rebuilt = GB.customer_graph_edges(spark, SF)
+    assert rebuilt is not edges
+    assert rebuilt.count() > 0
+    release(spark, "customer_graph")
 
 
 def test_ivf_centroid_cache_release(spark):
+    from distributed_graph_coloring_with_pyspark_spark.cache import release
     from distributed_graph_coloring_with_pyspark_spark.operators import similarity as S
 
     S.ann_ivf_topk(spark, SF).count()
-    assert S.clear_ivf_cache(spark) >= 1
-    assert S.clear_ivf_cache(spark) == 0
+    assert release(spark, "ivf_centroids")["ivf_centroids"] >= 1
+    assert release(spark, "ivf_centroids")["ivf_centroids"] == 0
 
 
 def test_entry_flagship(spark):

@@ -315,17 +315,18 @@ def test_ann_recall_report_reuses_session_artifacts(spark):
     returns identical values while the memo holds exactly the five
     tier frames, (b) release drops all five, (c) a post-release call
     rebuilds and still agrees — the artifact is a cache, not a fork."""
+    from distributed_graph_coloring_with_pyspark_spark.cache import _STORE, release
     from distributed_graph_coloring_with_pyspark_spark.operators.similarity import (
-        _ANN_TOPK_CACHE,
         ann_recall_report,
         ann_topk_frame_cached,
-        clear_ann_topk_cache,
     )
 
-    clear_ann_topk_cache(spark)
+    def topk_keys():
+        return [k for k in _STORE.get(id(spark), {}) if k[0] == "ann_topk"]
+
+    release(spark, "ann_topk")
     first = ann_recall_report(spark, SF).collect()
-    memo = _ANN_TOPK_CACHE.get(spark)
-    assert memo is not None and {m for (_, m) in memo} == {
+    assert {m for (_, _, m) in topk_keys()} == {
         "exact",
         "hyperplane_lsh",
         "ivf",
@@ -337,11 +338,11 @@ def test_ann_recall_report_reuses_session_artifacts(spark):
     assert ann_topk_frame_cached(spark, SF, "ivf") is cached_ivf
     second = ann_recall_report(spark, SF).collect()
     assert [r.asDict() for r in second] == [r.asDict() for r in first]
-    assert clear_ann_topk_cache(spark) == 6
-    assert _ANN_TOPK_CACHE.get(spark) is None
+    assert release(spark, "ann_topk") == {"ann_topk": 6}
+    assert topk_keys() == []
     rebuilt = ann_recall_report(spark, SF).collect()
     assert [r.asDict() for r in rebuilt] == [r.asDict() for r in first]
-    clear_ann_topk_cache(spark)
+    release(spark, "ann_topk")
 
 
 def test_contamination_plan_shape(spark):

@@ -164,6 +164,31 @@ def test_gate_state_is_one_fused_store(spark, corpus, tmp_path):
     ).count()
 
 
+def test_gate_refuses_legacy_state_layout(spark, corpus, tmp_path):
+    """A state dir in the legacy layout (per-store kept/, index/,
+    decisions/ dirs, no store/) reads as an EMPTY corpus through the
+    fused-store paths, so a restarted gate would admit duplicates of
+    everything already kept.  The gate must refuse it at startup."""
+    import shutil
+
+    src = str(tmp_path / "src")
+    state = str(tmp_path / "state")
+    os.makedirs(src)
+    n = max(d for d, _ in corpus) + 1
+    _write_chunk(spark, corpus, 0, n // 2, src, "c0")
+    streaming_neardup_gate(spark, src, state).collect()
+    # doctor the state back into the legacy layout: same epochs, the
+    # old per-store dir names, no fused store
+    store = os.path.join(state, "store")
+    for kind in ("kept", "index", "decisions"):
+        os.rename(os.path.join(store, f"kind={kind}"), os.path.join(state, kind))
+    shutil.rmtree(store)
+
+    _write_chunk(spark, corpus, n // 2, n, src, "c1")
+    with pytest.raises(ValueError, match="legacy per-store layout"):
+        streaming_neardup_gate(spark, src, state)
+
+
 def test_gate_empty_corpus_returns_empty_log(spark, tmp_path):
     """r12 (VERDICT r11 #2): an EMPTY documents table is a valid input —
     the corpus entry must return an empty decision log with the

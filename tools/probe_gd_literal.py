@@ -19,6 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from distributed_graph_coloring_with_pyspark_spark.cache import release
 from distributed_graph_coloring_with_pyspark_spark.session import get_spark
 from distributed_graph_coloring_with_pyspark_spark.operators import classifier as C
 
@@ -36,7 +37,7 @@ def main():
     for tag, wa in (("old-array", old_weight_array), ("new-lit", lit_weight_array),
                     ("old-array2", old_weight_array), ("new-lit2", lit_weight_array)):
         C._weight_array = wa
-        C.clear_classifier_cache(spark)
+        release(spark, "classifier")
         t0 = time.monotonic()
         w_full, losses, n = C.trained_weights_cached(spark, sf_dir, "full")
         t1 = time.monotonic()

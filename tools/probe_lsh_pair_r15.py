@@ -19,8 +19,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
+from distributed_graph_coloring_with_pyspark_spark.cache import release  # noqa: E402
 from distributed_graph_coloring_with_pyspark_spark.operators.similarity import (  # noqa: E402
-    clear_neardup_pair_cache,
     neardup_pair_frame_cached,
 )
 from distributed_graph_coloring_with_pyspark_spark.session import get_spark  # noqa: E402
@@ -37,7 +37,7 @@ def main():
             active.stop()
         spark = get_spark(app_name=f"probe-lsh-pair-{i}", cpus=cpus)
         spark.sparkContext.setLogLevel("ERROR")
-        clear_neardup_pair_cache(spark, "lsh")
+        release(spark, "neardup_pairs", "lsh")
         spark.sparkContext.setJobDescription(f"lsh_pair_build probe run {i}")
         t0 = time.monotonic()
         df = neardup_pair_frame_cached(spark, sf_dir, "lsh")
